@@ -16,6 +16,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import FIXTURE_TABLES
 
@@ -24,9 +25,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # DataFrames are immutable plan objects and the fixture files never change
 # within a session, so the (session, dir, table) -> DataFrame mapping is
-# safe to memoize — it skips the per-read parquet footer/schema RPC that
-# otherwise taxes every query build ~0.1s.  Weak-keyed on the session so
-# entries die with it (no stale plans against a stopped context).
+# safe to memoize — it skips re-reading the footer and re-resolving the
+# scan relation (file listing + analysis) on every query build.  Weak-keyed
+# on the session so entries die with it (no stale plans against a stopped
+# context).
 _LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = None  # type: ignore[assignment]
 
 
@@ -81,6 +83,22 @@ def events_ts_is_nanos(path: str) -> bool:
         return False
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of one parquet file, read from its footer on the
+    driver (well under a millisecond) — the same types Spark's own
+    inference yields, without the one-task inference job
+    ``spark.read.parquet(path)`` starts.  Timestamps without a UTC
+    adjustment map to TIMESTAMP_NTZ exactly when the session's inference
+    would (``spark.sql.parquet.inferTimestampNTZ.enabled``)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    return from_arrow_schema(
+        pq.read_schema(path), prefer_timestamp_ntz=ntz.lower() == "true"
+    )
+
+
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -88,7 +106,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
             df = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return spark.read.schema(EVENTS_MICROS_SCHEMA).parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
 
 
 def register_tables(

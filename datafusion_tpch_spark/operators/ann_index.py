@@ -39,6 +39,12 @@ from . import artifact_io
 
 FORMAT_VERSION = 2  # v2: fingerprint gained the all-dims L1 term
 
+# The artifacts' schemas as their writers declare them (``cells`` is
+# ``similarity.ivf_assign``'s output).  Readers name them, so no read
+# starts a schema-inference job.
+CENTROIDS_SCHEMA = "cid long, ce array<double>"
+CELLS_SCHEMA = "vec_id long, embedding array<float>, cell long"
+
 
 def default_index_root() -> str:
     """Repo-local artifact root (spark-warehouse/ is gitignored); override
@@ -106,7 +112,7 @@ def write_index(
     cent_df = inline_table(
         spark,
         [(int(cid), [float(x) for x in vec]) for cid, vec in sorted(centroids)],
-        "cid long, ce array<double>",
+        CENTROIDS_SCHEMA,
     )
     cent_df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
@@ -170,14 +176,18 @@ def index_is_current(path: str, fingerprint: str, params: dict | None = None,
 
 def load_centroids(spark: SparkSession, path: str) -> list[tuple[int, list[float]]]:
     """k rows to the driver — the bounded collect every probe needs."""
-    rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
+    rows = (
+        spark.read.schema(CENTROIDS_SCHEMA)
+        .parquet(os.path.join(path, "centroids")).collect()
+    )
     return sorted((int(r.cid), [float(x) for x in r.ce]) for r in rows)
 
 
-def load_cells(spark: SparkSession, path: str, cell_ids: list[int]) -> DataFrame:
-    """The probed inverted lists: a static IN-filter on the partition
-    column, so the scan lists only the probed directories."""
-    return (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .filter(F.col("cell").isin([int(c) for c in cell_ids]))
+def load_cells(spark: SparkSession, path: str, cell_ids: list[int],
+               subdir: str = "cells") -> DataFrame:
+    """The probed inverted lists (of ``subdir``, e.g. a compacted copy):
+    only the probed cell directories are listed, and a static IN-filter on
+    the partition column stays."""
+    return artifact_io.read_partitions(
+        spark, os.path.join(path, subdir), CELLS_SCHEMA, "cell", cell_ids
     )

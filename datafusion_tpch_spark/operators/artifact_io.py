@@ -19,11 +19,13 @@ tier built on top of it.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
@@ -109,3 +111,29 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
         return os.path.exists(path)
     fs, _, hpath = _hadoop_fs(path, spark)
     return bool(fs.exists(hpath))
+
+
+def read_partitions(spark: SparkSession, path: str, schema: str, column: str,
+                    values) -> DataFrame:
+    """The rows of the ``column``-partitioned parquet artifact at ``path``
+    whose ``column`` is in ``values``, read with the schema its writer
+    declares — no schema-inference job.
+
+    Only the ``column=<v>`` directories that exist are named (a value
+    with no rows has none), with ``basePath`` so ``column`` stays a
+    partition column; nothing else under ``path`` is listed.  Spark lists
+    up to ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
+    on the driver and starts a listing job beyond that, so a larger probe
+    is a union of scans of at most that many directories each.  The
+    ``isin`` filter stays, so every scan keeps a static PartitionFilter."""
+    vals = sorted({int(v) for v in values})
+    root = path.rstrip("/")
+    dirs = [d for d in (f"{root}/{column}={v}" for v in vals)
+            if exists(d, spark)]
+    per_scan = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    reader = spark.read.schema(schema).option("basePath", root)
+    scans = [reader.parquet(*dirs[i:i + per_scan])
+             for i in range(0, len(dirs), per_scan)]
+    df = functools.reduce(DataFrame.union, scans) if scans else reader.parquet()
+    return df.filter(F.col(column).isin(vals))

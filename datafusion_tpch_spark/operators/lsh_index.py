@@ -33,9 +33,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ann_index
+from . import ann_index, artifact_io
 
 FORMAT_VERSION = 1
+
+# The two cell-table forms ``write_lsh_index`` persists, with the types
+# their writers declare (``band`` is a literal int per band).  Readers
+# name the form they read, so no read starts a schema-inference job.
+OCCUPANCY_SCHEMA = "band int, bkey string, n_docs bigint"
+MEMBERSHIP_SCHEMA = "doc_id bigint, band int, bkey string, from_stream boolean"
 
 
 def lsh_index_path(sf_dir: str, root: str | None = None) -> str:
@@ -98,11 +104,13 @@ def lsh_index_is_current(path: str, fingerprint: str,
     return all(m.get(k) == v for k, v in (params or {}).items())
 
 
-def load_lsh_cells(spark: SparkSession, path: str,
+def load_lsh_cells(spark: SparkSession, path: str, schema: str,
                    bands: list[int] | None = None) -> DataFrame:
-    """The stored bucket table; with ``bands`` given, a static IN-filter
-    on the partition column so only those band directories are listed."""
-    df = spark.read.parquet(path.rstrip("/") + "/cells")
-    if bands is not None:
-        df = df.filter(F.col("band").isin([int(b) for b in bands]))
-    return df
+    """The stored bucket table in the form ``schema`` names
+    (``OCCUPANCY_SCHEMA`` or ``MEMBERSHIP_SCHEMA``); with ``bands`` given,
+    only those band directories are listed, under a static IN-filter on
+    the partition column."""
+    cells = path.rstrip("/") + "/cells"
+    if bands is None:
+        return spark.read.schema(schema).parquet(cells)
+    return artifact_io.read_partitions(spark, cells, schema, "band", bands)

@@ -17,7 +17,9 @@ The two OPTIMIZE-style jobs every long-lived parquet dataset needs at
   covers multi-column clustering.
 
 Both are pure DataFrame writes — no table format required; with
-Delta/Iceberg the same plans run under their OPTIMIZE entry points.
+Delta/Iceberg the same plans run under their OPTIMIZE entry points.  Each
+takes the dataset's ``schema`` (the one its writer declared), so reading
+it back starts no schema-inference job.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def data_file_count(path: str, spark: SparkSession | None = None) -> int:
@@ -73,6 +76,8 @@ def compact(
     out_path: str,
     target_records_per_file: int = 1_000_000,
     shuffle: bool = False,
+    *,
+    schema: StructType | str,
 ) -> int:
     """Bin-pack the dataset at ``path`` into ~``target_records_per_file``
     files at ``out_path``; returns the output file count.
@@ -82,7 +87,7 @@ def compact(
     ``shuffle=True`` round-robin repartitions, paying one shuffle to also
     even out skewed input files.
     """
-    df = spark.read.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     total = df.count()
     n_files = sized_partitions(total, target_records_per_file)
     df = df.repartition(n_files) if shuffle else df.coalesce(n_files)
@@ -101,6 +106,8 @@ def rewrite_sorted(
     sort_cols: list[str],
     n_files: int | None = 8,
     target_records_per_file: int = 1_000_000,
+    *,
+    schema: StructType | str,
 ) -> int:
     """Cluster the dataset by ``sort_cols``: range-partition into
     ``n_files`` shards and sort within each, so parquet footer min/max on
@@ -109,7 +116,7 @@ def rewrite_sorted(
     against ``target_records_per_file`` (``sized_partitions``) — the form
     a scheduled re-cluster job should use, so the same call packs a 1x
     and a 100x table correctly."""
-    df = spark.read.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     if n_files is None:
         n_files = sized_partitions(df.count(), target_records_per_file)
     (
@@ -121,14 +128,15 @@ def rewrite_sorted(
     return data_file_count(out_path)
 
 
-def key_ranges(spark: SparkSession, path: str, key: str) -> DataFrame:
+def key_ranges(spark: SparkSession, path: str, key: str, *,
+               schema: StructType | str) -> DataFrame:
     """Per-file min/max of ``key`` — the skipping stats a clustered layout
     produces (each row = one file's coverage; disjoint ranges = good
     clustering)."""
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(path)
+        spark.read.schema(schema).parquet(path)
         .withColumn("_file", F.input_file_name())
         .groupBy("_file")
         .agg(F.min(key).alias("min_key"), F.max(key).alias("max_key"))

@@ -44,6 +44,14 @@ from pyspark.sql import functions as F
 
 from . import ann_index, artifact_io
 
+# The artifacts' schemas as their writers declare them (``codes`` is
+# ``similarity.pq_codes``'s output, IVF-PQ ``cells`` is
+# ``similarity.ivf_pq_codes``'s).  Readers name them, so no read starts a
+# schema-inference job.
+CODEBOOKS_SCHEMA = "s int, j int, ce array<double>"
+CODES_SCHEMA = "vec_id long, codes array<int>"
+IVFPQ_CELLS_SCHEMA = "vec_id long, cell long, codes array<int>"
+
 
 def pq_index_path(sf_dir: str, root: str | None = None) -> str:
     """PQ artifact directory for one fixture — a sibling tier under the
@@ -74,7 +82,7 @@ def write_pq_index(
         for j in range(len(codebook[s]))
     ]
     inline_table(
-        spark, cb_rows, "s int, j int, ce array<double>"
+        spark, cb_rows, CODEBOOKS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebooks")
     )
@@ -92,7 +100,10 @@ def write_pq_index(
 def load_pq_codebook(spark: SparkSession, path: str) -> list:
     """m x k x sub nested list from ``codebooks/`` — the bounded collect
     (m*k rows) every serve session pays once."""
-    rows = spark.read.parquet(os.path.join(path, "codebooks")).collect()
+    rows = (
+        spark.read.schema(CODEBOOKS_SCHEMA)
+        .parquet(os.path.join(path, "codebooks")).collect()
+    )
     by_s: dict[int, dict[int, list[float]]] = {}
     for r in rows:
         by_s.setdefault(int(r.s), {})[int(r.j)] = [float(x) for x in r.ce]
@@ -102,7 +113,7 @@ def load_pq_codebook(spark: SparkSession, path: str) -> list:
 
 
 def load_pq_codes(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "codes"))
+    return spark.read.schema(CODES_SCHEMA).parquet(os.path.join(path, "codes"))
 
 
 def ivfpq_index_path(sf_dir: str, root: str | None = None) -> str:
@@ -134,7 +145,7 @@ def write_ivfpq_index(
     inline_table(
         spark,
         [(int(cid), [float(x) for x in vec]) for cid, vec in sorted(centroids)],
-        "cid long, ce array<double>",
+        ann_index.CENTROIDS_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
     )
@@ -144,7 +155,7 @@ def write_ivfpq_index(
         for j in range(len(codebook[s]))
     ]
     inline_table(
-        spark, cb_rows, "s int, j int, ce array<double>"
+        spark, cb_rows, CODEBOOKS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebooks")
     )
@@ -162,12 +173,12 @@ def write_ivfpq_index(
 
 def load_ivfpq_cells(spark: SparkSession, path: str,
                      cell_ids: "list[int]") -> DataFrame:
-    """The probed inverted lists of codes: a static IN-filter on the
-    partition column — only the probed directories are listed, and each
+    """The probed inverted lists of codes: only the probed directories
+    are listed, under a static IN-filter on the partition column, and each
     carries m ints per vector instead of the raw embedding."""
-    return (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .filter(F.col("cell").isin([int(c) for c in cell_ids]))
+    return artifact_io.read_partitions(
+        spark, os.path.join(path, "cells"), IVFPQ_CELLS_SCHEMA, "cell",
+        cell_ids,
     )
 
 

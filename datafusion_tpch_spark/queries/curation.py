@@ -1206,6 +1206,8 @@ ORDER BY d.doc_id
 # ===========================================================================
 
 _BPE_ARTIFACT_FORMAT = 1
+# vocab_tok/'s schema as ``_write_bpe_artifacts`` writes it
+_BPE_VOCAB_TOK_SCHEMA = "word string, freq bigint, n_tok bigint"
 
 
 def _bpe_artifact_path(sf_dir: str) -> str:
@@ -1294,7 +1296,9 @@ def docs_bpe_persisted_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not current:
         _write_bpe_artifacts(spark, sf_dir, path, fp, params)
-    vocab_tok = spark.read.parquet(path.rstrip("/") + "/vocab_tok")
+    vocab_tok = spark.read.schema(_BPE_VOCAB_TOK_SCHEMA).parquet(
+        path.rstrip("/") + "/vocab_tok"
+    )
     spread = docs.select("doc_id", "text").repartitionByRange(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
@@ -2035,6 +2039,14 @@ def _funnel_stage_dir(path: str, idx: int) -> str:
     return path.rstrip("/") + f"/s{idx}"
 
 
+def _funnel_stage(spark: SparkSession, path: str, idx: int) -> DataFrame:
+    """Stage ``idx``'s survivors, read with the (doc_id, n_tok) schema
+    every stage writes."""
+    return spark.read.schema("doc_id bigint, n_tok bigint").parquet(
+        _funnel_stage_dir(path, idx)
+    )
+
+
 def _funnel_stage_build(spark: SparkSession, sf_dir: str, path: str,
                         idx: int) -> None:
     """Compute stage ``idx``'s survivors (doc_id, n_tok) FROM the previous
@@ -2046,15 +2058,12 @@ def _funnel_stage_build(spark: SparkSession, sf_dir: str, path: str,
 
     (docs,) = _t(spark, sf_dir, "documents")
 
-    def prev_ids(i):
-        return spark.read.parquet(_funnel_stage_dir(path, i))
-
     if idx == 1:
         out = docs.select(
             "doc_id", text.token_count(F.col("text")).alias("n_tok")
         )
     elif idx == 2:
-        prev = prev_ids(1)
+        prev = _funnel_stage(spark, path, 1)
         fps = docs.join(prev.select("doc_id"), "doc_id").select(
             "doc_id", text.fingerprint(F.col("text")).alias("fp")
         )
@@ -2066,7 +2075,7 @@ def _funnel_stage_build(spark: SparkSession, sf_dir: str, path: str,
         )
         out = prev.join(keep, "doc_id")
     elif idx == 3:
-        prev = prev_ids(2)
+        prev = _funnel_stage(spark, path, 2)
         bk = _capped_lsh_membership(
             _lsh_buckets_raw(spark, sf_dir).join(
                 prev.select("doc_id"), "doc_id"
@@ -2074,7 +2083,7 @@ def _funnel_stage_build(spark: SparkSession, sf_dir: str, path: str,
         )
         out = prev.join(_bucket_drop_ids(bk), "doc_id", "left_anti")
     elif idx == 4:
-        prev = prev_ids(3)
+        prev = _funnel_stage(spark, path, 3)
         pair = (
             docs.join(prev.select("doc_id"), "doc_id")
             .select(
@@ -2109,9 +2118,13 @@ def _funnel_stage_build(spark: SparkSession, sf_dir: str, path: str,
             .select("doc_id", "n_tok")
         )
     elif idx == 5:
-        out = prev_ids(4).filter(F.col("n_tok") >= _YIELD_MIN_TOK)
+        out = _funnel_stage(spark, path, 4).filter(
+            F.col("n_tok") >= _YIELD_MIN_TOK
+        )
     elif idx == 6:
-        prev = prev_ids(5).filter(F.col("doc_id") % _DECON_EVAL_MOD != 0)
+        prev = _funnel_stage(spark, path, 5).filter(
+            F.col("doc_id") % _DECON_EVAL_MOD != 0
+        )
         sh = F.explode(text.shingles(F.col("text"), _DECON_N)).alias("shingle")
         eval_sh = (
             docs.filter(F.col("doc_id") % _DECON_EVAL_MOD == 0)
@@ -2186,7 +2199,7 @@ def docs_pipeline_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
         ai.update_manifest(path, spark=spark, stages_done=sorted(done))
 
     reports = [
-        spark.read.parquet(_funnel_stage_dir(path, idx))
+        _funnel_stage(spark, path, idx)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.coalesce(F.sum("n_tok"), F.lit(0)).cast("bigint")

@@ -543,7 +543,7 @@ def dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") >= _INCR_SPLIT
     )
     cells = (
-        li.load_lsh_cells(spark, path)
+        li.load_lsh_cells(spark, path, li.OCCUPANCY_SCHEMA)
         .filter(F.col("n_docs") <= _LSH_MAX_BUCKET)  # serve-side cap
         .select("band", "bkey")
     )

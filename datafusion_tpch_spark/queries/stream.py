@@ -18,6 +18,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.exact import dsum_sql
 from ..streaming import (
@@ -29,6 +30,7 @@ from ..streaming import (
     session_window_stream,
     sliding_agg_stream,
 )
+from ..streaming.maintenance import VERDICTS_SCHEMA
 from . import QuerySpec
 
 
@@ -328,13 +330,7 @@ def events_multibatch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import hourly_agg_stream, run_stream_to_df
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = _split4_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _one_file_per_batch(spark, _split4_layout(spark, sf_dir))
     agg = hourly_agg_stream(stream)
     return run_stream_to_df(
         spark, agg, "events_multibatch_stream", reuse_key=sf_dir
@@ -464,24 +460,37 @@ def _sweep_stopped_sessions(cache) -> None:
             cache.pop(sess, None)
 
 
-def _split4_layout(spark: SparkSession, sf_dir: str) -> str:
+def _one_file_per_batch(spark: SparkSession,
+                        layout: tuple[str, StructType]) -> DataFrame:
+    """Stream a ``(path, schema)`` layout one file per micro-batch, read
+    with the schema of the frame the layout was written from — no
+    schema-inference job."""
+    path, schema = layout
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+
+
+def _split4_layout(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
     """The 4-file arbitrary-split events layout used to force real
     micro-batch boundaries (events_multibatch_stream, events_cdc_stream);
-    written once per (process, fixture)."""
+    written once per (process, fixture).  Returns ``(path, schema)``."""
     import os
 
     from ..catalog import load_table
     from .advanced import _scratch_path
 
     path = _scratch_path("events_split4", sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+        ev.repartition(4).write.mode("overwrite").parquet(path)
+    return path, ev.schema
 
 
-def _timeordered_week_layout(spark: SparkSession, sf_dir: str) -> str:
+def _timeordered_week_layout(spark: SparkSession,
+                             sf_dir: str) -> tuple[str, StructType]:
     """Write the fixture events as four single-file time-quartile slices whose
     file MODIFICATION TIMES increase with event time — Spark's file
     stream source orders new files by (mtime, path), so streaming this
@@ -489,7 +498,8 @@ def _timeordered_week_layout(spark: SparkSession, sf_dir: str) -> str:
     time order, modeling the per-key-ordered changelog a Kafka/CDC feed
     guarantees.  (A plain repartitionByRange write does NOT stream in
     range order — measured: batches arrived 2,3,0,1 — hence the explicit
-    per-slice writes.)  Built once per (process, fixture)."""
+    per-slice writes.)  Built once per (process, fixture).  Returns
+    ``(path, schema)``."""
     import glob
     import os
     import shutil
@@ -499,11 +509,11 @@ def _timeordered_week_layout(spark: SparkSession, sf_dir: str) -> str:
     from .advanced import _scratch_path
 
     layout = _scratch_path("events_weeks4", sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     if os.path.exists(os.path.join(layout, "_SUCCESS")):
-        return layout
+        return layout, ev.schema
     shutil.rmtree(layout, ignore_errors=True)
     os.makedirs(layout)
-    ev = load_table(spark, sf_dir, "events")
     # slice boundaries derived from the data (one cheap agg), so no event
     # can fall outside the covered range whatever the fixture's window
     lo, hi = ev.agg(
@@ -525,7 +535,7 @@ def _timeordered_week_layout(spark: SparkSession, sf_dir: str) -> str:
         os.utime(dst, (base + i, base + i))
     shutil.rmtree(f"{layout}.stage", ignore_errors=True)
     open(os.path.join(layout, "_SUCCESS"), "w").close()
-    return layout
+    return layout, ev.schema
 
 
 def events_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,13 +602,7 @@ def events_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         holder["open"] = new_open.localCheckpoint()
         holder["n"] += 1
 
-    layout = _timeordered_week_layout(spark, sf_dir)
-    schema = spark.read.parquet(layout).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(layout)
-    )
+    feed = _one_file_per_batch(spark, _timeordered_week_layout(spark, sf_dir))
     run_foreach_batch(spark, feed, apply_batch, "events_scd2_stream")
     states[sf_dir] = (holder["agg"], holder["open"], holder["n"])
     return scd2_finalize(holder["agg"], holder["open"])
@@ -702,16 +706,9 @@ def events_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the same 4-file layout events_multibatch_stream proves batch
     # boundaries with
-    path = _split4_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .filter(
-            (F.col("ts") >= cut)
-            & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
-        )
+    feed = _one_file_per_batch(spark, _split4_layout(spark, sf_dir)).filter(
+        (F.col("ts") >= cut)
+        & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
     )
     run_foreach_batch(spark, feed, apply_batch, "events_cdc_stream")
     states[sf_dir] = (holder["state"], holder["n"])
@@ -768,10 +765,12 @@ _INGEST_STREAM_STATE: (
 ) = weakref.WeakKeyDictionary()
 
 
-def _docs_incoming_layout(spark: SparkSession, sf_dir: str) -> str:
+def _docs_incoming_layout(spark: SparkSession,
+                          sf_dir: str) -> tuple[str, StructType]:
     """The incoming-crawl slice (doc_id >= split) written as 4 arbitrary
     parquet files so ``maxFilesPerTrigger=1`` forces ≥4 real micro-batch
-    boundaries; written once per (process, fixture)."""
+    boundaries; written once per (process, fixture).  Returns
+    ``(path, schema)``."""
     import os
 
     from ..catalog import load_table
@@ -779,16 +778,14 @@ def _docs_incoming_layout(spark: SparkSession, sf_dir: str) -> str:
     from .extensions import _INCR_SPLIT
 
     path = _scratch_path("docs_incoming4", sf_dir)
+    incoming = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") >= _INCR_SPLIT)
+        .select("doc_id", "text", "source")
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") >= _INCR_SPLIT)
-            .select("doc_id", "text", "source")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+        incoming.repartition(4).write.mode("overwrite").parquet(path)
+    return path, incoming.schema
 
 
 def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,18 +836,10 @@ def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if holder["n"] % 8 == 0:
             holder["verdicts"] = holder["verdicts"].localCheckpoint()
 
-    path = _docs_incoming_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    feed = _one_file_per_batch(spark, _docs_incoming_layout(spark, sf_dir))
     run_foreach_batch(spark, feed, apply_batch, "docs_dedup_ingest_stream")
     if holder["verdicts"] is None:  # empty incoming slice
-        holder["verdicts"] = spark.createDataFrame(
-            [], "doc_id bigint, n_hit_buckets bigint, kept boolean"
-        )
+        holder["verdicts"] = spark.createDataFrame([], VERDICTS_SCHEMA)
     final = holder["verdicts"].localCheckpoint()
     states[sf_dir] = (final, holder["n"])
     return final.orderBy("doc_id")
@@ -910,7 +899,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         # membership (what a fresh build job would read back), shared by
         # every micro-batch
         corpus_cells = (
-            li.load_lsh_cells(spark, path)
+            li.load_lsh_cells(spark, path, li.MEMBERSHIP_SCHEMA)
             .filter(~F.col("from_stream"))
             .groupBy("band", "bkey")
             .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -920,9 +909,9 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         # verdicts table seeded EMPTY so an empty incoming slice still
         # leaves a readable (zero-row) parquet table
-        spark.createDataFrame(
-            [], "doc_id bigint, n_hit_buckets bigint, kept boolean"
-        ).write.mode("overwrite").parquet(verd_dir)
+        spark.createDataFrame([], VERDICTS_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(verd_dir)
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
@@ -937,13 +926,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
                 .write.mode("append").partitionBy("band").parquet(cells_dir)
             )
 
-        layout = _docs_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(layout).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(layout)
-        )
+        feed = _one_file_per_batch(spark, _docs_incoming_layout(spark, sf_dir))
         run_foreach_batch(spark, feed, apply_batch,
                           "dedup_persisted_ingest_stream")
         corpus_cells.unpersist()
@@ -951,7 +934,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # serve session: the verdict table from the artifacts alone
     return (
-        spark.read.parquet(verd_dir)
+        spark.read.schema(VERDICTS_SCHEMA).parquet(verd_dir)
         .select(
             "doc_id",
             F.col("n_hit_buckets").cast("bigint").alias("n_hit_buckets"),
@@ -1019,7 +1002,7 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = ai.read_manifest(path, spark=spark) or {}
     if (m.get("compact_src_files") != n_before
             or m.get("compact_src_verdict_files") != nv_before):
-        cells = spark.read.parquet(cells_dir)
+        cells = spark.read.schema(li.MEMBERSHIP_SCHEMA).parquet(cells_dir)
         parts = sized_partitions(cells.count(), _COMPACT_TARGET_RECORDS)
         (
             cells
@@ -1030,7 +1013,7 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(compact_dir)
         )
         nv_after = compact(spark, verd_dir, verd_compact_dir,
-                           _COMPACT_TARGET_RECORDS)
+                           _COMPACT_TARGET_RECORDS, schema=VERDICTS_SCHEMA)
         n_after = data_file_count(compact_dir)
         assert n_after <= n_before, (n_after, n_before)
         assert nv_after <= max(nv_before, 1), (nv_after, nv_before)
@@ -1039,7 +1022,7 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serve FROM THE COMPACTED LAYOUT: corpus-capped admission, the same
     # contract (and oracle) as the live index
     corpus_cells = (
-        spark.read.parquet(compact_dir)
+        spark.read.schema(li.MEMBERSHIP_SCHEMA).parquet(compact_dir)
         .filter(~F.col("from_stream"))
         .groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1075,26 +1058,26 @@ _EMB_DRIFT_TH = 0.12   # per-dim |cell mean - centroid| flagged as shifted
 _EMB_DRIFT_DIMS = 16   # cell drift trigger: more than this many shifted dims
 
 
-def _emb_incoming_layout(spark: SparkSession, sf_dir: str) -> str:
+def _emb_incoming_layout(spark: SparkSession,
+                         sf_dir: str) -> tuple[str, StructType]:
     """The incoming vector slice (vec_id >= split) written as 4 arbitrary
     parquet files so ``maxFilesPerTrigger=1`` forces ≥4 real micro-batch
-    boundaries; written once per (process, fixture)."""
+    boundaries; written once per (process, fixture).  Returns
+    ``(path, schema)``."""
     import os
 
     from ..catalog import load_table
     from .advanced import _scratch_path
 
     path = _scratch_path("emb_incoming4", sf_dir)
+    incoming = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") >= _EMB_SPLIT)
+        .select("vec_id", "embedding")
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") >= _EMB_SPLIT)
-            .select("vec_id", "embedding")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+        incoming.repartition(4).write.mode("overwrite").parquet(path)
+    return path, incoming.schema
 
 
 def _emb_corpus_centroids(spark: SparkSession, sf_dir: str) -> list:
@@ -1165,13 +1148,7 @@ def embeddings_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).localCheckpoint()
             holder["n"] += 1
 
-        path = _emb_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        feed = _one_file_per_batch(spark, _emb_incoming_layout(spark, sf_dir))
         run_foreach_batch(spark, feed, apply_batch, "embeddings_ingest_stream")
         if holder["occ"] is None:  # empty incoming slice
             holder["occ"] = spark.createDataFrame(
@@ -1604,13 +1581,7 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).localCheckpoint()
             )
 
-        path = _emb_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        feed = _one_file_per_batch(spark, _emb_incoming_layout(spark, sf_dir))
         run_foreach_batch(spark, feed, apply_batch, "ann_ingest_topk")
         idx = segments[0]
         for seg in segments[1:]:
@@ -1740,13 +1711,7 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
                 .write.mode("append").partitionBy("cell").parquet(cells_dir)
             )
 
-        layout = _emb_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(layout).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(layout)
-        )
+        feed = _one_file_per_batch(spark, _emb_incoming_layout(spark, sf_dir))
         run_foreach_batch(spark, feed, apply_batch, "ann_persisted_ingest")
         ai.update_manifest(path, spark=spark, ingested=True)  # durability point — LAST
     return path, emb
@@ -1775,8 +1740,7 @@ def _serve_ingest_ann(spark: SparkSession, emb: DataFrame, path: str,
         "query_id long, qe array<float>, qcell long",
     )
     c = (
-        spark.read.parquet(path.rstrip("/") + "/" + cells_subdir)
-        .filter(F.col("cell").isin(probed))
+        ai.load_cells(spark, path, probed, cells_subdir)
         .select(
             F.col("vec_id").alias("cand_id"),
             F.col("embedding").alias("ce"),
@@ -1836,7 +1800,7 @@ def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     if m.get("compact_src_files") != n_before:
         from ..operators.maintenance import sized_partitions
 
-        cells = spark.read.parquet(cells_dir)
+        cells = spark.read.schema(ai.CELLS_SCHEMA).parquet(cells_dir)
         parts = sized_partitions(cells.count(), _COMPACT_TARGET_RECORDS)
         (
             cells
@@ -1898,13 +1862,7 @@ def docs_token_meter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         holder["meter"] = meter_merge(holder["meter"], m).localCheckpoint()
         holder["n"] += 1
 
-    path = _docs_incoming_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    feed = _one_file_per_batch(spark, _docs_incoming_layout(spark, sf_dir))
     run_foreach_batch(spark, feed, apply_batch, "docs_token_meter_stream")
     if holder["meter"] is None:  # empty incoming slice
         holder["meter"] = spark.createDataFrame(
@@ -2011,13 +1969,7 @@ def docs_substring_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if holder["n"] % 8 == 0:
             holder["verdicts"] = holder["verdicts"].localCheckpoint()
 
-    path = _docs_incoming_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    feed = _one_file_per_batch(spark, _docs_incoming_layout(spark, sf_dir))
     run_foreach_batch(spark, feed, apply_batch, "docs_substring_ingest_stream")
     if holder["verdicts"] is None:  # empty incoming slice
         holder["verdicts"] = spark.createDataFrame(

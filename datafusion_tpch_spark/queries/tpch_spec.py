@@ -59,7 +59,7 @@ _SPEC_TABLES = (
 
 
 # sessions whose catalog already carries the spec_* views — registering
-# all 8 tables costs ~8 parquet footer reads, which 22 gates × best-of-3
+# all 8 tables resolves 8 parquet relations, which 22 gates × best-of-3
 # bench runs would otherwise pay 500+ times per process.  Keyed by the
 # SparkSession itself (weakly, so a GC'd session can't alias a new one):
 # temp views are SESSION-scoped, so an applicationId key would wrongly
@@ -84,16 +84,20 @@ def _ensure_spec_tables(spark: SparkSession) -> None:
         return
     for name in _SPEC_TABLES:
         path = os.path.join(_SPEC_DIR, name)
+        gen = GENERATORS[name](spark, _SPEC_SF)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             stage = f"{path}.stage.{os.getpid()}"
-            copy_to_parquet(GENERATORS[name](spark, _SPEC_SF), stage)
+            copy_to_parquet(gen, stage)
             try:
                 os.rename(stage, path)
             except OSError:  # lost the race: another process renamed first
                 import shutil
 
                 shutil.rmtree(stage, ignore_errors=True)
-        spark.read.parquet(path).createOrReplaceTempView(f"spec_{name}")
+        # the generator's schema: no schema-inference job per table
+        spark.read.schema(gen.schema).parquet(path).createOrReplaceTempView(
+            f"spec_{name}"
+        )
     _REGISTERED_SESSIONS[spark] = True
 
 

@@ -14,9 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 def copy_to_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> int:
     """``COPY <table-or-query> TO <path> STORED AS PARQUET`` equivalent.
-    Returns the row count (the COPY statement's result, examples/parquet.rs:22)."""
+    Returns the row count (the COPY statement's result, examples/parquet.rs:22),
+    counted back with the schema just written — no schema-inference job."""
     df.write.mode(mode).parquet(path)
-    return df.sparkSession.read.parquet(path).count()
+    return df.sparkSession.read.schema(df.schema).parquet(path).count()
 
 
 def copy_table_to_parquet(spark: SparkSession, table: str, path: str) -> int:

@@ -159,19 +159,23 @@ def _phone(tag: str, key: Column, nationkey: Column) -> Column:
 # --- fixed tables -----------------------------------------------------------
 
 def tpch_region(spark: SparkSession, sf: float = 1.0, part: int = 1, num_parts: int = 1) -> DataFrame:
-    """Mirrors TpchRegion (src/lib.rs:183-186): 5 rows × 3 cols, fixed."""
+    """Mirrors TpchRegion (src/lib.rs:183-186): 5 rows × 3 cols, fixed;
+    ``part`` of ``num_parts`` holds its ``_slice`` of the 5 keys."""
     _validate(sf, part, num_parts)
+    lo, hi = _slice(len(REGIONS), part, num_parts)
     df = spark.createDataFrame(
-        [(i, name) for i, name in enumerate(REGIONS)], "r_regionkey long, r_name string"
+        [(i, REGIONS[i]) for i in range(lo, hi)], "r_regionkey long, r_name string"
     )
     return df.withColumn("r_comment", _comment("rc", F.col("r_regionkey")))
 
 
 def tpch_nation(spark: SparkSession, sf: float = 1.0, part: int = 1, num_parts: int = 1) -> DataFrame:
-    """Mirrors TpchNation (src/lib.rs:133-137): 25 rows × 4 cols, fixed."""
+    """Mirrors TpchNation (src/lib.rs:133-137): 25 rows × 4 cols, fixed;
+    ``part`` of ``num_parts`` holds its ``_slice`` of the 25 keys."""
     _validate(sf, part, num_parts)
+    lo, hi = _slice(len(NATIONS), part, num_parts)
     df = spark.createDataFrame(
-        [(i, n, r) for i, (n, r) in enumerate(NATIONS)],
+        [(i, *NATIONS[i]) for i in range(lo, hi)],
         "n_nationkey long, n_name string, n_regionkey long",
     )
     return df.withColumn("n_comment", _comment("nc", F.col("n_nationkey")))

@@ -130,18 +130,18 @@ SCHEMAS = {
 
 def rows_region(sf: float, part: int = 1, num_parts: int = 1):
     _validate(sf, part, num_parts)
-    keys = np.arange(len(REGIONS), dtype=np.int64)
+    keys = _ids(len(REGIONS), part, num_parts)
     comments = _comment("rc", ("long", keys))
-    return list(zip(keys.tolist(), REGIONS, comments))
+    return [(int(i), REGIONS[i], c) for i, c in zip(keys, comments)]
 
 
 def rows_nation(sf: float, part: int = 1, num_parts: int = 1):
     _validate(sf, part, num_parts)
-    keys = np.arange(len(NATIONS), dtype=np.int64)
+    keys = _ids(len(NATIONS), part, num_parts)
     comments = _comment("nc", ("long", keys))
     return [
-        (int(i), name, int(rk), c)
-        for (name, rk), i, c in zip(NATIONS, keys, comments)
+        (int(i), NATIONS[i][0], int(NATIONS[i][1]), c)
+        for i, c in zip(keys, comments)
     ]
 
 

@@ -229,6 +229,11 @@ def scd2_finalize(agg: DataFrame, opn: DataFrame) -> DataFrame:
 
 # ------------------------------------------- near-dup ingest admission
 
+# ``admit_batch``'s output: the schema of every verdict table, in memory
+# or persisted
+VERDICTS_SCHEMA = "doc_id bigint, n_hit_buckets bigint, kept boolean"
+
+
 def admit_batch(
     batch_buckets: DataFrame, batch_ids: DataFrame, corpus_cells: DataFrame
 ) -> DataFrame:

@@ -10,8 +10,10 @@ probed cells.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.operators import ann_index as ai
 from datafusion_tpch_spark.queries import extensions as ext
@@ -200,6 +202,86 @@ def test_serve_scan_is_partition_pruned(spark, index_dir):
     assert pruned, plan
     for ln in pruned:
         assert "INSET" in ln or "IN (" in ln, ln
+
+
+def _parquet_jobs(sc, group: str) -> list[int]:
+    """Jobs of ``group`` started by a ``.parquet(...)`` call itself:
+    schema inference or parallel partition discovery."""
+    tracker = sc.statusTracker()
+    return [
+        j for j in tracker.getJobIdsForGroup(group)
+        if any(
+            (si := tracker.getStageInfo(s)) is not None
+            and si.name.startswith("parquet at")
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+
+
+def _built_with_parquet_jobs(spark, build):
+    """``build()``'s result and the parquet jobs building it started."""
+    sc = spark.sparkContext
+    group = f"artifact-reads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "artifact reads must start no parquet jobs")
+    try:
+        return build(), _parquet_jobs(sc, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_artifact_reads_start_no_parquet_jobs(spark, index_dir):
+    """Against built indexes, serving reads each artifact with its
+    declared schema and names only the probed cell directories: building
+    the serve plan and the drift gate starts no schema-inference or
+    partition-discovery job (more probed cells than Spark lists on the
+    driver become a union of scans, each partition-pruned)."""
+    from datafusion_tpch_spark.queries import stream as st
+
+    _fresh_build(spark, index_dir)
+    st.embeddings_drift_retrain(spark, SF_DIR).collect()  # v1, v2, swap
+    path = ai.index_path(SF_DIR, index_dir)
+    for build in (
+        lambda: ext._serve_persisted_ivf_topk(spark, SF_DIR, path),
+        lambda: st.embeddings_drift_retrain(spark, SF_DIR),
+    ):
+        _, jobs = _built_with_parquet_jobs(spark, build)
+        assert jobs == []
+
+
+def test_probed_cell_without_directory(spark, index_dir):
+    """A probed cell with no members has no directory (the k-means update
+    keeps empty cells): the cell read skips it, and the serve plan still
+    builds without a parquet job and answers from the other cells."""
+    import shutil
+
+    from datafusion_tpch_spark.catalog import load_table
+
+    _fresh_build(spark, index_dir)
+    path = ai.index_path(SF_DIR, index_dir)
+    emb = load_table(spark, SF_DIR, "embeddings")
+    probed = sorted({
+        int(r.qcell) for r in
+        ext._ivf_query_probes(emb, ai.load_centroids(spark, path)).collect()
+    })
+    empty = probed[0]
+    members = {r.vec_id for r in ai.load_cells(spark, path, [empty]).collect()}
+    assert members
+    shutil.rmtree(os.path.join(path, "cells", f"cell={empty}"))
+
+    got = ai.load_cells(spark, path, probed).collect()
+    want = (
+        spark.read.parquet(os.path.join(path, "cells"))
+        .filter(F.col("cell").isin(probed)).collect()
+    )
+    assert sorted(r.vec_id for r in got) == sorted(r.vec_id for r in want)
+    assert empty not in {r.cell for r in got}
+
+    served, jobs = _built_with_parquet_jobs(
+        spark, lambda: ext._serve_persisted_ivf_topk(spark, SF_DIR, path)
+    )
+    assert jobs == []
+    rows = served.collect()
+    assert rows and not {r.cand_id for r in rows} & members
 
 
 def test_persisted_ingest_durable_serve(spark, index_dir, monkeypatch):

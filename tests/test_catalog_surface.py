@@ -3,10 +3,26 @@ SHOW TABLES / information schema, in-memory tables, display/collection."""
 
 from __future__ import annotations
 
-from datafusion_tpch_spark.catalog import listing, register_tables
+import os
+import subprocess
+import sys
+
+import pytest
+
+from datafusion_tpch_spark import FIXTURE_TABLES
+from datafusion_tpch_spark.catalog import listing, load_table, register_tables
 from datafusion_tpch_spark.sources.parquet_io import show_tables
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIXTURE_DIRS = [
+    d for d in (
+        *(os.path.join(os.path.dirname(SF_DIR), sf)
+          for sf in ("sf0.001", "sf0.01", "sf0.1")),
+        os.path.join(REPO, "perfbench", "data", "sf0.01"),
+    )
+    if os.path.isdir(d)
+]
 
 
 def test_show_tables_lists_registered_views(spark):
@@ -93,3 +109,43 @@ def test_parquet_example_flow_sql(spark, tmp_path):
         str(tmp_path / "tpch_supplier.parquet"),
     )
     assert m == 10
+
+
+# events reads through its own explicit schemas (TimestampType, never the
+# inferred TIMESTAMP_NTZ), so only the footer-derived tables are compared
+@pytest.mark.parametrize("sf_dir", FIXTURE_DIRS)
+def test_load_table_schema_equals_spark_inference(spark, sf_dir):
+    """The footer-derived schema is exactly what Spark's own inference
+    would produce, for every fixture table in every fixture dir."""
+    for t in FIXTURE_TABLES:
+        if t == "events":
+            continue
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).schema
+        assert load_table(spark, sf_dir, t).schema == inferred, (sf_dir, t)
+
+
+_FRESH_APP_LOADS = """
+import sys
+from datafusion_tpch_spark import FIXTURE_TABLES
+from datafusion_tpch_spark.catalog import load_table
+from datafusion_tpch_spark.session import build_session
+
+spark = build_session("fresh-loads", master="local[1]")
+sc = spark.sparkContext
+sc.setJobGroup("loads", "loads")
+for t in FIXTURE_TABLES:
+    load_table(spark, sys.argv[1], t)
+print("jobs", len(sc.statusTracker().getJobIdsForGroup("loads")))
+spark.stop()
+"""
+
+
+def test_load_table_starts_no_jobs_in_fresh_app():
+    """Loading every fixture table in a fresh application runs no Spark
+    job: no schema inference, no distributed listing."""
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_APP_LOADS, SF_DIR], cwd=REPO,
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    assert len(FIXTURE_TABLES) == 10
+    assert "jobs 0" in out.splitlines(), out

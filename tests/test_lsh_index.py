@@ -103,7 +103,7 @@ def test_band_probe_is_partition_pruned(spark, index_dir):
     listed."""
     ext.dedup_persisted_lsh(spark, SF_DIR).collect()
     path = li.lsh_index_path(SF_DIR, index_dir)
-    df = li.load_lsh_cells(spark, path, bands=[0, 2])
+    df = li.load_lsh_cells(spark, path, li.OCCUPANCY_SCHEMA, bands=[0, 2])
     plan = df._jdf.queryExecution().executedPlan().toString()
     pruned = [ln for ln in plan.splitlines()
               if "PartitionFilters: [band#" in ln]
@@ -145,7 +145,7 @@ def test_persisted_ingest_stream_durable_serve(spark, index_dir, monkeypatch):
 
     # index growth: admitted docs' membership appended as from_stream rows
     path = li.lsh_index_path(SF_DIR, index_dir) + "_ingest"
-    stored = li.load_lsh_cells(spark, path)
+    stored = li.load_lsh_cells(spark, path, li.MEMBERSHIP_SCHEMA)
     grown = {r.doc_id for r in
              stored.filter("from_stream").select("doc_id").distinct().collect()}
     assert grown == {r.doc_id for r in rows1 if r.kept}

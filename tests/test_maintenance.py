@@ -28,6 +28,13 @@ def tmpdirs():
 
 
 @pytest.fixture()
+def orders_schema(spark):
+    """The schema ``fragmented`` writes, which the maintenance operators
+    read it back with."""
+    return load_table(spark, SF_DIR, "orders").schema
+
+
+@pytest.fixture()
 def fragmented(spark, tmpdirs):
     """A deliberately over-fragmented copy of orders (64 tiny files)."""
     src = os.path.join(tmpdirs, "frag")
@@ -36,9 +43,10 @@ def fragmented(spark, tmpdirs):
     return src
 
 
-def test_compact_reduces_file_count_keeps_rows(spark, tmpdirs, fragmented):
+def test_compact_reduces_file_count_keeps_rows(spark, tmpdirs, fragmented, orders_schema):
     out = os.path.join(tmpdirs, "compacted")
-    n = compact(spark, fragmented, out, target_records_per_file=10_000)
+    n = compact(spark, fragmented, out, target_records_per_file=10_000,
+                schema=orders_schema)
     assert n == data_file_count(out)
     assert n <= 2  # sf0.001 orders = 1500 rows -> one 10k-record file
     before = spark.read.parquet(fragmented)
@@ -50,10 +58,10 @@ def test_compact_reduces_file_count_keeps_rows(spark, tmpdirs, fragmented):
     assert s(after) == s(before)
 
 
-def test_compact_shuffle_mode(spark, tmpdirs, fragmented):
+def test_compact_shuffle_mode(spark, tmpdirs, fragmented, orders_schema):
     out = os.path.join(tmpdirs, "compacted_sh")
     n = compact(spark, fragmented, out, target_records_per_file=500,
-                shuffle=True)
+                shuffle=True, schema=orders_schema)
     # 1500 rows / 500 per file -> 3 partitions; round-robin imbalance may
     # push one partition past the cap and split it
     assert 3 <= n <= 4
@@ -61,13 +69,14 @@ def test_compact_shuffle_mode(spark, tmpdirs, fragmented):
     assert after.count() == 1500
 
 
-def test_rewrite_sorted_produces_disjoint_ranges(spark, tmpdirs, fragmented):
+def test_rewrite_sorted_produces_disjoint_ranges(spark, tmpdirs, fragmented, orders_schema):
     out = os.path.join(tmpdirs, "clustered")
-    n = rewrite_sorted(spark, fragmented, out, ["o_orderkey"], n_files=4)
+    n = rewrite_sorted(spark, fragmented, out, ["o_orderkey"], n_files=4,
+                       schema=orders_schema)
     assert n >= 3  # range partitioner may merge sparse bounds
     ranges = sorted(
         (r["min_key"], r["max_key"])
-        for r in key_ranges(spark, out, "o_orderkey").collect()
+        for r in key_ranges(spark, out, "o_orderkey", schema=orders_schema).collect()
     )
     # clustered layout: every file covers a disjoint key range
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
@@ -76,11 +85,12 @@ def test_rewrite_sorted_produces_disjoint_ranges(spark, tmpdirs, fragmented):
     assert spark.read.parquet(out).count() == 1500
 
 
-def test_clustered_scan_skips_files(spark, tmpdirs, fragmented):
+def test_clustered_scan_skips_files(spark, tmpdirs, fragmented, orders_schema):
     """The point of clustering: a selective key predicate reads a subset
     of files (observable through input_file_name on the filtered scan)."""
     out = os.path.join(tmpdirs, "clustered2")
-    rewrite_sorted(spark, fragmented, out, ["o_orderkey"], n_files=4)
+    rewrite_sorted(spark, fragmented, out, ["o_orderkey"], n_files=4,
+                   schema=orders_schema)
     total = data_file_count(out)
     touched = (
         spark.read.parquet(out)
@@ -118,9 +128,9 @@ def test_data_file_count_scheme_qualified(spark, tmp_path):
     assert data_file_count(f"file://{local}/absent", spark=spark) == 0
 
 
-def test_rewrite_sorted_derives_shards_from_volume(spark, tmpdirs, fragmented):
+def test_rewrite_sorted_derives_shards_from_volume(spark, tmpdirs, fragmented, orders_schema):
     out = os.path.join(tmpdirs, "clustered_auto")
     n = rewrite_sorted(spark, fragmented, out, ["o_orderkey"],
-                       n_files=None, target_records_per_file=500)
+                       n_files=None, target_records_per_file=500, schema=orders_schema)
     # 1500 rows / 500 per file -> 3 range shards
     assert n == 3

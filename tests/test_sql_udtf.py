@@ -88,6 +88,25 @@ def test_lateral_parts_compose_sql(spark):
     assert parts == whole
 
 
+@pytest.mark.parametrize("num_parts", [1, 2, 4, 7, 32])
+@pytest.mark.parametrize("table", ["nation", "region"])
+def test_lateral_parts_partition_fixed_tables_sql(spark, table, num_parts):
+    """The fixed-size tables split by part too: the LATERAL union over
+    any part count is the whole table, each row exactly once (more parts
+    than rows leaves the surplus parts empty)."""
+    whole = sorted(
+        tuple(r) for r in spark.sql(f"SELECT * FROM tpch_{table}({SF})").collect()
+    )
+    parts = sorted(
+        tuple(r)
+        for r in spark.sql(
+            f"SELECT t.* FROM range(1, {num_parts + 1}) AS r, "
+            f"LATERAL tpch_{table}({SF}, CAST(r.id AS INT), {num_parts}) AS t"
+        ).collect()
+    )
+    assert parts == whole
+
+
 def test_tpch_path_flush(spark, tmp_path):
     """tpch(sf, path) flushes every table to <path>/<table>.parquet — the
     reference documents this arg (src/lib.rs:277-279) but its call() never

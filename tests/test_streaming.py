@@ -267,8 +267,7 @@ def test_cdc_stream_recovers_from_checkpoint_after_crash(spark, tmp_path):
         return snaps[-1] if snaps else None
 
     def make_feed():
-        path = _split4_layout(spark, SF_DIR)
-        schema = spark.read.parquet(path).schema
+        path, schema = _split4_layout(spark, SF_DIR)
         return (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -393,8 +392,7 @@ def test_scd2_stream_recovers_from_checkpoint_after_crash(spark, tmp_path):
         return snaps[-1] if snaps else None
 
     def make_feed():
-        layout = _timeordered_week_layout(spark, SF_DIR)
-        schema = spark.read.parquet(layout).schema
+        layout, schema = _timeordered_week_layout(spark, SF_DIR)
         return (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)

@@ -9,7 +9,10 @@ generates the whole table regardless, src/lib.rs:85-106).
 
 from __future__ import annotations
 
+import functools
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark import TPCH_TABLES
@@ -64,6 +67,19 @@ def test_parts_union_equals_whole(spark):
     assert u.count() == whole.count()
     assert u.exceptAll(whole).count() == 0
     assert whole.exceptAll(u).count() == 0
+
+
+@pytest.mark.parametrize("num_parts", [1, 2, 4, 7, 32])
+@pytest.mark.parametrize("table", ["nation", "region"])
+def test_fixed_table_parts_union_equals_whole(spark, table, num_parts):
+    """nation/region honor part/num_parts like the scaled tables: the
+    parts union to the whole table with no row repeated."""
+    whole = sorted(tuple(r) for r in tpch_gen.call_tpch(spark, table, SF).collect())
+    u = functools.reduce(DataFrame.unionAll, [
+        tpch_gen.call_tpch(spark, table, SF, part=p, num_parts=num_parts)
+        for p in range(1, num_parts + 1)
+    ])
+    assert sorted(tuple(r) for r in u.collect()) == whole
 
 
 def test_invalid_args_raise(spark):
